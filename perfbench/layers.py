@@ -128,10 +128,11 @@ def crawl_layers(res, stages_by_op):
     m["pipeline.rate_1core_per_s"] = stats.median([stats._round_rate(r) for r in low])
     m["pipeline.scaling_eff"] = stats.median([stats._round_rate(r) for r in rounds]) / (
         res["cores"] * m["pipeline.rate_1core_per_s"]) if low and rounds else None
-    seed_ops = stats._ok(ops, "ingest")
-    dedup = [st for o in seed_ops for st in stages_by_op.get(o["id"], [])
-             if stats.attribute(st["callsite"], st["write_path"]) == "frontier.seed_dedup"]
-    m["frontier.seed_dedup_s"] = _stage_wall(dedup)
+    # normalizeCandidates and newOnly build a lazy plan that runs inside the
+    # pool commit's write, so every stage of a timed seed call is the fused
+    # normalize -> anti-join -> pool write (median over the calls)
+    m["frontier.seed_dedup_s"] = stats.median([
+        _stage_wall(stages_by_op.get(o["id"], [])) for o in stats._ok(ops, "ingest")])
     m.update(res["probes"])
     return m
 

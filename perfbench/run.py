@@ -28,6 +28,7 @@ HERE = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, HERE)
 
 import layers  # noqa: E402
+import stats  # noqa: E402
 
 DEADLINE_S = 170
 JDK_OPENS = ["java.base/java.lang", "java.base/java.lang.invoke",
@@ -185,6 +186,7 @@ def main():
                 if not ok:
                     log(f"oracle mismatch {q}: {detail}")
         out = layers.report(res, checks, args.trace == 1, root, len(names))
+        log(f"samples per end-to-end median: {json.dumps(stats.sample_counts(res))}")
     finally:
         if not args.keep:
             shutil.rmtree(work, ignore_errors=True)

@@ -55,7 +55,8 @@ def main():
             print(f"{name:28s} values={xs}")
             continue
         print(f"{name:28s} median={stats.median(xs):<12.6g} "
-              f"spread={stats.quartile_spread(xs):.3f} bound={bounds.get(name)}")
+              f"spread={stats.quartile_spread(xs):.3f} bound={bounds.get(name)} "
+              f"values={[round(x, 4) for x in xs]}")
 
 
 if __name__ == "__main__":

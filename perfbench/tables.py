@@ -2,9 +2,10 @@
 
 Writes the ten single-file parquet tables that `graft.SparkEntry.queries`
 reads (region, nation, customer, supplier, part, orders, lineitem, events,
-documents, embeddings) with the same schemas, key ranges and value domains
-as the TPC-H-ish test tables, scaled by `sf`. The same (seed, sf) always
-gives byte-identical files.
+documents, embeddings) with the schemas, row counts, key ranges and value
+distributions of the repository's TPC-H-ish test tables (TESTDATA.md),
+scaled by `sf`. `compare_tables.py` checks the match against a directory
+of those tables. The same (seed, sf) always gives byte-identical files.
 """
 
 import os
@@ -43,17 +44,15 @@ def _write(out_dir, name, df, schema):
 
 
 def _texts(rng, n):
-    """Documents: random words over a 30-word vocabulary; about 4.5% are
-    an earlier document plus a trailing ' dup' (near duplicates) and 0.5%
-    are exact copies of an earlier document."""
-    lengths = rng.integers(8, 100, n)
+    """Documents: 10 to 100 random words over a 30-word vocabulary; exactly
+    one in 20 is replaced, in order, by another document (any position)
+    plus a trailing ' dup', so a few near duplicates copy a near duplicate
+    and two near duplicates of one document are exact copies of each other."""
+    lengths = rng.integers(10, 101, n)
     words = np.array(WORDS)
     texts = [" ".join(words[rng.integers(0, len(words), k)]) for k in lengths]
-    for i in range(1, n):
-        r = rng.random()
-        if r < 0.05:
-            j = int(rng.integers(0, i))
-            texts[i] = texts[j] if r < 0.005 else texts[j] + " dup"
+    for i in np.sort(rng.choice(n, n // 20, replace=False)):
+        texts[i] = texts[int(rng.integers(0, n))] + " dup"
     return texts
 
 
@@ -113,7 +112,7 @@ def generate(out_dir, seed, sf):
         "o_custkey": rng.integers(0, n_cust, n_ord).astype(np.int64),
         "o_orderstatus": np.array(["F", "O", "P"])[rng.integers(0, 3, n_ord)],
         "o_totalprice": _money(rng.uniform(1000.0, 500000.0, n_ord)),
-        "o_orderdate": _days(rng, n_ord, "1995-01-01", 2404),
+        "o_orderdate": _days(rng, n_ord, "1995-01-01", 2405),
         "o_orderpriority": np.array(PRIORITIES)[rng.integers(0, 5, n_ord)]}),
         pa.schema([("o_orderkey", i64), ("o_custkey", i64),
                    ("o_orderstatus", s), ("o_totalprice", f64),
@@ -126,11 +125,11 @@ def generate(out_dir, seed, sf):
         "l_linenumber": rng.integers(1, 8, n_line).astype(np.int32),
         "l_quantity": qty,
         "l_extendedprice": _money(rng.uniform(900.0, 105000.0, n_line)),
-        "l_discount": rng.integers(0, 11, n_line) / 100.0,
-        "l_tax": rng.integers(0, 9, n_line) / 100.0,
+        "l_discount": _money(rng.uniform(0.0, 0.1, n_line)),
+        "l_tax": _money(rng.uniform(0.0, 0.08, n_line)),
         "l_returnflag": np.array(["A", "N", "R"])[rng.integers(0, 3, n_line)],
         "l_linestatus": np.array(["F", "O"])[rng.integers(0, 2, n_line)],
-        "l_shipdate": _days(rng, n_line, "1995-01-02", 2498)}),
+        "l_shipdate": _days(rng, n_line, "1995-01-02", 2499)}),
         pa.schema([("l_orderkey", i64), ("l_partkey", i64), ("l_suppkey", i64),
                    ("l_linenumber", i32), ("l_quantity", f64),
                    ("l_extendedprice", f64), ("l_discount", f64),
@@ -157,10 +156,10 @@ def generate(out_dir, seed, sf):
         "n_chars": np.array([len(t) for t in texts], dtype=np.int64)}),
         pa.schema([("doc_id", i64), ("text", s), ("lang", s), ("source", s),
                    ("n_chars", i64)]))
-    # embeddings: 10 labelled clusters of unit vectors in 64 dimensions
+    # embeddings: isotropic unit vectors in 64 dimensions with labels
+    # 0..9 drawn independently of them (the test tables have no clusters)
     labels = rng.integers(0, 10, n_emb)
-    centers = rng.normal(0.0, 1.0, (10, 64))
-    vecs = centers[labels] + rng.normal(0.0, 1.5, (n_emb, 64))
+    vecs = rng.normal(0.0, 1.0, (n_emb, 64))
     vecs = (vecs / np.linalg.norm(vecs, axis=1, keepdims=True)).astype(np.float32)
     _write(out_dir, "embeddings", pd.DataFrame({
         "vec_id": np.arange(n_emb, dtype=np.int64),

@@ -98,6 +98,32 @@ class AttributionTest(unittest.TestCase):
         self.assertEqual(stats.attribute("", ""), "client")
 
 
+def _op(kind, name, wall, cpu=1.0, **extra):
+    return dict({"id": f"{kind}-{name}-{wall}", "kind": kind, "name": name, "leg": "ncore",
+                 "ok": True, "wall_s": wall, "cpu_s": cpu}, **extra)
+
+
+class ReductionTest(unittest.TestCase):
+    def test_query_metrics_use_per_query_medians(self):
+        ops = [_op("cold", "q01_a", 3.0), _op("cold", "q02_b", 5.0),
+               _op("query", "q01_a", 1.0, build_s=0.1), _op("query", "q01_a", 3.0, build_s=0.3),
+               _op("query", "q02_b", 2.0, build_s=0.5)]
+        res = {"ops": ops, "workload": "queries", "cores": 4, "setups_s": [7.0]}
+        m = stats.end_to_end(res, expected_queries=2)
+        # medians 2.0 and 2.0 s: 2 queries in a 4 s suite
+        self.assertAlmostEqual(m["rate_per_s"], 0.5)
+        self.assertAlmostEqual(m["ingest_s"], (0.2 + 0.5) / 2)
+        self.assertAlmostEqual(m["cold_s"], 8.0)
+        self.assertIsNone(stats.end_to_end(res, expected_queries=3)["rate_per_s"])
+
+    def test_seed_dedup_is_the_median_seed_call_stage_time(self):
+        seeds = [_op("ingest", "addSeedCandidates", w) for w in (1.0, 2.0, 3.0)]
+        stages = {o["id"]: [{"start_ms": 0, "end_ms": 1000 * k}, {"start_ms": 0, "end_ms": 500}]
+                  for k, o in zip((4, 2, 6), seeds)}
+        res = {"ops": seeds, "facts": {"links": 6}, "cores": 4, "probes": {}}
+        self.assertEqual(layers.crawl_layers(res, stages)["frontier.seed_dedup_s"], 4.0)
+
+
 class ContractTest(unittest.TestCase):
     def test_benchmark_json_lists_the_reported_metrics(self):
         with open(os.path.join(ROOT, "BENCHMARK.json")) as fh:

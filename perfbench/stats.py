@@ -122,13 +122,13 @@ def _cpu_eff(ops, cores):
     return sum(o["cpu_s"] for o in ops) / (wall * cores) if ops else None
 
 
-def query_medians(ops):
-    """{query: (median wall s, median cpu s, median build s)} over the
-    timed passes."""
+def query_medians(ops, kind="query"):
+    """{query: (median wall s, median cpu s)} over the operations of `kind`
+    (timed executions, or builder calls)."""
     by = {}
-    for o in _ok(ops, "query"):
+    for o in _ok(ops, kind):
         by.setdefault(o["name"], []).append(o)
-    return {q: tuple(median([o[k] for o in os_]) for k in ("wall_s", "cpu_s", "build_s"))
+    return {q: tuple(median([o[k] for o in os_]) for k in ("wall_s", "cpu_s"))
             for q, os_ in by.items()}
 
 
@@ -153,9 +153,11 @@ def end_to_end(res, expected_queries=0):
             m["rate_per_s"] = len(med) / suite
             m["cpu_ms_per_item"] = 1e3 * sum(v[1] for v in med.values()) / len(med)
             m["core_eff"] = _cpu_eff(_ok(ops, "query"), cores)
-            # the median query's builder share: its table reads and scan
-            # planning, robust to the few builders that run jobs eagerly
-            m["ingest_s"] = median([v[2] for v in med.values()])
+        # the builders' table reads, scan planning and query planning: the
+        # sum over the read-and-plan builders of each one's median call
+        built = query_medians(ops, "build")
+        if built and len(built) == res["facts"].get("builders", -1):
+            m["ingest_s"] = sum(v[0] for v in built.values())
         cold = _ok(ops, "cold")
         if cold and len(cold) == expected_queries:
             m["cold_s"] = sum(o["wall_s"] for o in cold)
@@ -173,6 +175,7 @@ def sample_counts(res):
                  ingest_s=len(_ok(ops, "ingest")), cold_s=len(_ok(ops, "resume")))
     else:
         passes = facts.get("passes", 0)
+        builds = len(_ok(ops, "build")) // max(1, facts.get("builders", 1))
         n.update(rate_per_s=passes, cpu_ms_per_item=passes, core_eff=passes,
-                 ingest_s=passes, cold_s=1)
+                 ingest_s=builds, cold_s=1)
     return n

@@ -106,15 +106,21 @@ def _op(kind, name, wall, cpu=1.0, **extra):
 class ReductionTest(unittest.TestCase):
     def test_query_metrics_use_per_query_medians(self):
         ops = [_op("cold", "q01_a", 3.0), _op("cold", "q02_b", 5.0),
-               _op("query", "q01_a", 1.0, build_s=0.1), _op("query", "q01_a", 3.0, build_s=0.3),
-               _op("query", "q02_b", 2.0, build_s=0.5)]
-        res = {"ops": ops, "workload": "queries", "cores": 4, "setups_s": [7.0]}
+               _op("query", "q01_a", 1.0), _op("query", "q01_a", 3.0),
+               _op("query", "q02_b", 2.0),
+               _op("build", "q01_a", 0.1), _op("build", "q01_a", 0.4),
+               _op("build", "q01_a", 0.2)]
+        res = {"ops": ops, "workload": "queries", "cores": 4, "setups_s": [7.0],
+               "facts": {"builders": 1}}
         m = stats.end_to_end(res, expected_queries=2)
         # medians 2.0 and 2.0 s: 2 queries in a 4 s suite
         self.assertAlmostEqual(m["rate_per_s"], 0.5)
-        self.assertAlmostEqual(m["ingest_s"], (0.2 + 0.5) / 2)
+        # one read-and-plan builder, median call 0.2 s
+        self.assertAlmostEqual(m["ingest_s"], 0.2)
         self.assertAlmostEqual(m["cold_s"], 8.0)
         self.assertIsNone(stats.end_to_end(res, expected_queries=3)["rate_per_s"])
+        res["facts"]["builders"] = 2
+        self.assertIsNone(stats.end_to_end(res, expected_queries=2)["ingest_s"])
 
     def test_seed_dedup_is_the_median_seed_call_stage_time(self):
         seeds = [_op("ingest", "addSeedCandidates", w) for w in (1.0, 2.0, 3.0)]

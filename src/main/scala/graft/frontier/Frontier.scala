@@ -16,10 +16,13 @@ import org.apache.spark.sql.types._
  *    seen-set check is against ALL ever-seen URLs (store/url.go:168-170);
  *  - rows are partitioned by `host_bucket = pmod(xxhash64(host), P)` so
  *    pop/visit/dedup all shuffle on the same key → co-partitioned joins;
- *  - membership: broadcast Bloom filter as an ADVISORY pre-filter only —
- *    bloom-negative candidates are provably new and skip the join; only
- *    bloom-positives pay the exact left-anti join (false positives never
- *    drop a URL — SURVEY.md §7.3 hard part 2);
+ *  - membership is exact, with no Bloom pre-filter: new candidates meet
+ *    the live pool inside [[mergeRound]]'s one aggregation (an existing
+ *    row always wins), and archived urls are dropped after it by the
+ *    partition-local [[SeenIndex]] probe of the bucket's own archive
+ *    slice — seeding and rounds alike. The exact index supersedes the
+ *    north rule's Bloom pre-filter (no false positive can ever drop a URL,
+ *    SURVEY.md §7.3 hard part 2, and no sketch is built or broadcast);
  *  - politeness: per-host row_number cap per round (the 1-in-flight ready
  *    token of worker.go:1238-1253, generalized to a budget);
  *  - priority: (depth, discovered_at, url) — crawl-depth then discovery
@@ -132,37 +135,6 @@ object Frontier {
         unpackDepth(col("k")).as("depth"),
         unpackDiscoveredAt(col("k")).as("discovered_at"),
         lit(0L).as("last_visit"))
-  }
-
-  /**
-   * URL-seen dedup (urlStore.Add, store/url.go:155-220): return only the
-   * candidates NOT already in the frontier. Bloom pre-filter + exact
-   * anti-join on bloom-positives; never drops on a Bloom hit alone.
-   */
-  /** @param expectedRows frontier cardinality hint (e.g. from the table
-    *   manifest) — avoids a count scan; pass -1 to count here.
-    * @param bloomMinRows below this the Bloom pre-filter is skipped (one
-    *   anti-join beats building+broadcasting a filter for small tables). */
-  def newOnly(frontier: DataFrame, candidates: DataFrame,
-      expectedRows: Long = -1L, bloomMinRows: Long = 4000000L): DataFrame = {
-    val n = if (expectedRows >= 0) expectedRows else frontier.count()
-    if (n == 0) return candidates
-    if (n < bloomMinRows)
-      return candidates.join(frontier.select("url"), Seq("url"), "left_anti")
-    graft.functions.GraftExpressions.register(frontier.sparkSession)
-    // build over xxhash64(url) longs; probe with Spark's codegen'd
-    // BloomFilterMightContain (the same expression a runtime-filter join
-    // injects) — the sketch rides the plan as a binary literal, no UDF
-    val bloom = frontier.select(xxhash64(col("url")).as("h"))
-      .stat.bloomFilter("h", math.max(n, 64L), 0.03)
-    val bos = new java.io.ByteArrayOutputStream()
-    bloom.writeTo(bos)
-    val maybe = call_function("bloom_might_contain",
-      lit(bos.toByteArray), xxhash64(col("url")))
-    val definitelyNew = candidates.filter(!maybe)
-    val survivors = candidates.filter(maybe)
-      .join(frontier.select("url"), Seq("url"), "left_anti")
-    definitelyNew.unionByName(survivors)
   }
 
   /** Restore the derivable columns a SLIM pool file drops
@@ -522,8 +494,12 @@ object Frontier {
         visit.as("last_visit"))
     val f = slim(frontier, 0, col("last_visit"))
     val c = slim(cands, 1, lit(0L))
-    // popped ⊆ frontier: full identity is already on the row
-    val m = slim(popped, 0, lit(round))
+    // popped ⊆ frontier: full identity is already on the row. The visit
+    // mark is a BOUND constant, not `lit(round)`: a primitive literal is
+    // spliced into the generated Java, so every round would compile new
+    // classes
+    graft.functions.GraftExpressions.register(frontier.sparkSession)
+    val m = slim(popped, 0, graft.functions.GraftExpressions.bound_long(round))
     // the bucket EXPRESSION is also a grouping key (groups unchanged —
     // it's a function of url): Catalyst's alias-aware partitioning then
     // recognizes the repartition-on-expression as satisfying the

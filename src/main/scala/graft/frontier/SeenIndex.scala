@@ -35,8 +35,10 @@ import org.apache.spark.unsafe.types.UTF8String
  *
  * Exactness: membership is over the full URL strings (UTF8String equality)
  * — not a sketch — so the filter is exactly the archive anti-join it
- * replaces. The cuckoo/Bloom layers ([[SeenFilterStore]], [[Frontier
- * .newOnly]]) remain advisory volume reducers; this index is load-bearing.
+ * replaces. It supersedes the north rule's Bloom pre-filter: seeding and
+ * rounds both drop archived urls through it, with no sketch built or
+ * broadcast. The opt-in cuckoo [[SeenFilterStore]] remains an advisory
+ * volume reducer; this index is load-bearing.
  *
  * Memory & cluster notes: one JVM holds the buckets it executes —
  * local-mode = all of them (bench: ~6 M URLs/round × rounds ≈ 1 GB of a
@@ -120,15 +122,23 @@ object SeenIndex {
     loadUrlDir(
       java.nio.file.Paths.get(root, s"round=$r", s"host_bucket=$bucket").toString, into)
 
+  /** The reader conf with the `url`-only read schema, built once per JVM
+    * and only read after: a `new Configuration()` per (bucket, round)
+    * slice would re-parse Hadoop's default XML resources on every load. */
+  private lazy val urlReadConf: org.apache.hadoop.conf.Configuration = {
+    val conf = new org.apache.hadoop.conf.Configuration()
+    conf.set(org.apache.parquet.hadoop.api.ReadSupport.PARQUET_READ_SCHEMA,
+      "message g { optional binary url (UTF8); }")
+    conf
+  }
+
   /** Load the `url` column of every parquet file under `dir` into `into`
     * (shared with [[PoolIndex]]). Missing dirs are a no-op. */
   private[frontier] def loadUrlDir(dirPath: String,
       into: java.util.Set[UTF8String]): Unit = {
     val dir = java.nio.file.Paths.get(dirPath)
     if (!java.nio.file.Files.exists(dir)) return
-    val conf = new org.apache.hadoop.conf.Configuration()
-    conf.set(org.apache.parquet.hadoop.api.ReadSupport.PARQUET_READ_SCHEMA,
-      "message g { optional binary url (UTF8); }")
+    val conf = urlReadConf
     // materialize + CLOSE the listing stream: an unclosed Files.list holds
     // the directory fd until GC — at one listing per (bucket, round) per
     // executor these leaks exhaust the fd limit mid-campaign (measured)

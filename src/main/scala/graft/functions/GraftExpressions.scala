@@ -852,6 +852,28 @@ object GraftExpressions {
       copy(child = c)
   }
 
+  /**
+   * `bound_long(v)` — the constant `v`, read by generated code from the
+   * plan's reference array instead of being spliced into the Java source.
+   * Spark inlines primitive literals, so a plan that differs from the last
+   * one only in a per-round constant (`lit(round)`) compiles a new class
+   * every round; with the constant bound here the source is identical and
+   * the codegen cache hits. Not foldable, so the optimizer keeps it.
+   */
+  case class BoundLong(value: Long)
+      extends org.apache.spark.sql.catalyst.expressions.LeafExpression {
+    override def dataType: DataType = LongType
+    override def nullable: Boolean = false
+    override def foldable: Boolean = false
+    override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = value
+    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+      import org.apache.spark.sql.catalyst.expressions.codegen._
+      val ref = ctx.addReferenceObj("boundLong", java.lang.Long.valueOf(value), "java.lang.Long")
+      ev.copy(code = EmptyBlock, isNull = FalseLiteral,
+        value = JavaCode.expression(s"$ref.longValue()", LongType))
+    }
+  }
+
   /** Register all custom functions for SQL + `call_function` use. Idempotent. */
   def register(spark: SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
@@ -908,14 +930,11 @@ object GraftExpressions {
       es => BucketCounts(es(0),
         es(1).eval(org.apache.spark.sql.catalyst.InternalRow.empty).asInstanceOf[Int]),
       "scala_udf")
-    // Spark's own codegen'd probe (BloomFilterMightContain — what a
-    // runtime-filter join injects): arg0 = serialized sketch BloomFilter
-    // literal, arg1 = xxhash64 of the probe value. Registered so the
-    // frontier's seen-set pre-filter stays inside WholeStageCodegen
-    // instead of a twice-evaluated Scala UDF (round-1 verdict #5).
-    reg.createOrReplaceTempFunction("bloom_might_contain",
-      es => org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain(
-        es(0), es(1)), "scala_udf")
+    // arg0 must be a foldable long literal
+    reg.createOrReplaceTempFunction("bound_long",
+      es => BoundLong(
+        es(0).eval(org.apache.spark.sql.catalyst.InternalRow.empty).asInstanceOf[Long]),
+      "scala_udf")
     // partition-local exact seen-set probe (args: url, archive-root
     // literal, cutoff-round literal) — see graft.frontier.SeenIndex for
     // the design and the partition→bucket binding contract
@@ -977,6 +996,8 @@ object GraftExpressions {
       org.apache.spark.sql.functions.lit(planesPerTable))
   def bucket_counts(b: Column, n: Int): Column =
     call_function("bucket_counts", b, org.apache.spark.sql.functions.lit(n))
+  def bound_long(v: Long): Column =
+    call_function("bound_long", org.apache.spark.sql.functions.lit(v))
   def seen_index_contains(url: Column, root: String, cutoff: Int): Column =
     call_function("seen_index_contains", url,
       org.apache.spark.sql.functions.lit(root), org.apache.spark.sql.functions.lit(cutoff))

@@ -97,7 +97,19 @@ class Crawler(
     writerOptions = writerOptions ++
       (if (cfg.frontierCodec.nonEmpty) Map("compression" -> cfg.frontierCodec)
        else Map.empty),
-    dropCols = Seq("host", "host_bucket", "last_visit"))
+    dropCols = Seq("host", "host_bucket", "last_visit"),
+    numBuckets = cfg.numBuckets)
+
+  // the bucket count fixes which bucket every url hashes to: pool files,
+  // archive slices and the SeenIndex/PoolIndex probes are all keyed by it.
+  // Resuming under another count would probe the wrong archive slice and
+  // re-admit visited urls, so a mismatch is refused here, before any seed
+  // or round runs.
+  frontierTable.currentSnapshot().flatMap(_.bucketsN).foreach { n =>
+    require(n == cfg.numBuckets,
+      s"frontier at $workDir was written with numBuckets=$n but the config has " +
+        s"numBuckets=${cfg.numBuckets} (a crawl cannot be resumed under another bucket count)")
+  }
 
   /** Delta-pool (LSM) mode: rounds append per-bucket delta files instead
     * of rewriting the base, compacting every `poolDeltaRounds` rounds. Only
@@ -190,6 +202,9 @@ class Crawler(
     seenWithRound.drop("round")
       .select(Frontier.schema.fieldNames.map(col).toIndexedSeq: _*)
 
+  private def noFrontierRows: DataFrame = spark.createDataFrame(
+    spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], Frontier.schema)
+
   def docIdOf(url: String): String = "d" + UrlFns.sha256Hex(url).substring(0, 16)
 
   /** Seed the frontier (round 0 commit). Seeds are depth 0, discovery order
@@ -199,25 +214,38 @@ class Crawler(
       .select(col("url"), lit(0).as("depth"), col("pos").cast("long").as("discovered_at")))
 
   /** Distributed seeding: `raw` has (url, depth, discovered_at) and can be
-    * any size — 10^10-scale seed lists never pass through the driver. */
+    * any size — 10^10-scale seed lists never pass through the driver.
+    *
+    * Seeding is the round's merge without visit marks: ONE exchange onto
+    * the balanced bucket token ([[Frontier.mergeRound]]), which AQE never
+    * coalesces, so the sorted bucket write runs one task per bucket.
+    * First-seen is urlStore.Add's (store/url.go:155-220): a live pool row
+    * beats any candidate (the src bit of the packed priority), among
+    * candidates the minimum (depth, discovered_at) wins, and archived urls
+    * are dropped after the merge by the exact partition-local
+    * [[graft.frontier.SeenIndex]] probe, never shuffled. */
   def addSeedCandidates(raw: DataFrame): Long = {
-    val cands = Frontier.normalizeCandidates(raw, cfg.numBuckets, cfg.respectRobots)
-    val pool = poolView
-    // the seen-set check is against EVERYTHING ever seen: live pool +
-    // archive. Manifest row count + archive counter as the cardinality
-    // hint — newOnly would otherwise pay a count() scan on every re-seed.
-    val fresh = Frontier.newOnly(pool.unionByName(seen()), cands,
-      expectedRows =
-        frontierTable.currentSnapshot().map(_.rows).getOrElse(0L) + seenRows)
-    // only the POOL is rewritten; archived rows never re-enter it
-    val merged = pool.unionByName(fresh)
+    val nb = cfg.numBuckets
+    // in-batch dedup is the merge's own; the cuckoo filter update below
+    // wants one row per url, as in the round
+    val cands = Frontier.normalizeCandidates(raw, nb, cfg.respectRobots,
+      dedup = cfg.useSeenFilter)
     val seedRound = math.max(lastRound, 0)
+    val merged0 = Frontier.mergeRound(poolView, cands, noFrontierRows, seedRound, nb)
+    // rounds ≤ lastRound are committed, so the probe's cutoff is lastRound;
+    // before round 1 nothing is archived
+    val merged =
+      if (lastRound < 1) merged0
+      else merged0.filter(
+        !graft.functions.GraftExpressions.seen_index_contains(col("url"), seenDir, lastRound))
     // a re-seed REWRITES the manifest at the same round (and compacts any
     // live deltas) — drop the pool index's cached snapshot of that round
     // (single-JVM; on a cluster the stale-base loud check in PoolIndex
     // catches it)
     if (deltaModeActive) graft.frontier.PoolIndex.invalidate()
-    val rows = frontierTable.commit(merged, seedRound)
+    // the merge output is already 1:1 bucket→partition; the commit's
+    // one-file-per-bucket check verifies that claim
+    val rows = frontierTable.commit(merged, seedRound, preClustered = true)
     if (cfg.useSeenFilter)
       seenFilters.updateAndSave(spark, seedRound, seedRound, cands, frontier())
     rows + seenRows
@@ -252,6 +280,7 @@ class Crawler(
   /** Run one fetch round; returns stats (popped==0 ⇒ frontier exhausted). */
   def round(): RoundStats = {
     val r = lastRound + 1
+    val compiles0 = Crawler.codegenCompiles
     val poolRowsHint = frontierTable.currentSnapshot().map(_.rows).getOrElse(0L)
     val frontierRowsHint = poolRowsHint + seenRows
     val pool = poolView
@@ -544,13 +573,11 @@ class Crawler(
     if (poppedN == 0) {
       // throttled to zero: commit an empty delta (every bucket clean) so
       // the snapshot round advances and per-host tokens accrue
-      val empty = spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], Frontier.schema)
       val rows = (if (deltaModeActive)
-        frontierTable.appendDelta(empty, r, 0L, beforeRename = () => joinStateWrite())
-      else frontierTable.commit(empty, r, Some(Set.empty),
+        frontierTable.appendDelta(noFrontierRows, r, 0L, beforeRename = () => joinStateWrite())
+      else frontierTable.commit(noFrontierRows, r, Some(Set.empty),
         beforeRename = () => joinStateWrite())) + seenRows
-      writeLineage(r, Seq.empty, 0, 0, 0, 0, rows)
+      writeLineage(r, Seq.empty, 0, 0, 0, 0, rows, compiles0)
       cached.unpersist()
       return RoundStats(r, 0, 0, 0, 0, rows, offeredN)
     }
@@ -592,10 +619,13 @@ class Crawler(
     //     commit. Candidates stay RAW (dedup=false): mergeRound's single
     //     aggregation dedups them with identical min-struct semantics,
     //     saving one full candidate exchange per round.
+    // discovery stamp = r·10^6 + link position, added in the thinning
+    // closure below rather than as a `lit(r·10^6)` column: a primitive
+    // literal is spliced into the generated Java, so every round would
+    // compile new classes
     val rawNew = written
       .select(col("depth"), posexplode(col("links")).as(Seq("pos", "url")))
-      .select(col("url"), (col("depth") + 1).as("depth"),
-        (lit(r.toLong * 1000000L) + col("pos")).as("discovered_at"))
+      .select(col("url"), (col("depth") + 1).as("depth"), col("pos").cast("long").as("pos"))
     // partition-local candidate thinning: links repeat heavily WITHIN a
     // fetch partition (same-host links target the host's own page space;
     // a hot host referenced from everywhere funnels ~millions of duplicate
@@ -630,10 +660,11 @@ class Crawler(
       val seenRootB = s"$workDir/seen"
       val poolRootB = frontierTable.root
       val nbB = cfg.numBuckets
+      val stampBase = r.toLong * 1000000L
       rawNew.as[(String, Int, Long)].mapPartitions { it =>
         val best = new java.util.HashMap[String, java.lang.Long](thinCap)
-        it.foreach { case (u, d, t) =>
-          val k = (d.toLong << 47) + t
+        it.foreach { case (u, d, pos) =>
+          val k = (d.toLong << 47) + stampBase + pos
           val prev = best.get(u)
           if (prev == null || k < prev) best.put(u, k)
         }
@@ -661,14 +692,12 @@ class Crawler(
     if (deltaRound) {
       val cands0 = Frontier.normalizeCandidates(thinned, cfg.numBuckets,
         cfg.respectRobots, dedup = false)
-      val emptyF = spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], Frontier.schema)
       // in-round dedup with the merge's exact min-pack rule (ONE exchange
       // onto the balanced bucket token — also the layout the delta write
       // needs), then drop everything ever seen: pool members (base+deltas,
       // PoolIndex) and archived urls (SeenIndex) — together exactly the
       // classic merge's first-seen semantics (existing row always wins)
-      val fresh = Frontier.mergeRound(emptyF, cands0, emptyF, r, cfg.numBuckets)
+      val fresh = Frontier.mergeRound(noFrontierRows, cands0, noFrontierRows, r, cfg.numBuckets)
         .filter(!graft.functions.GraftExpressions.pool_index_contains(
           col("url"), frontierTable.root, r - 1))
         .filter(!graft.functions.GraftExpressions.seen_index_contains(
@@ -678,7 +707,7 @@ class Crawler(
       seenRows += poppedN
       val frontierRows = poolRows + seenRows
       val newN = math.max(0L, frontierRows - math.max(frontierRowsHint, 0L))
-      writeLineage(r, perBucketCounts, poppedN, fetchedOk, errs, newN, frontierRows)
+      writeLineage(r, perBucketCounts, poppedN, fetchedOk, errs, newN, frontierRows, compiles0)
       cached.unpersist()
       return RoundStats(r, poppedN, fetchedOk, errs, newN, frontierRows, offeredN)
     }
@@ -749,21 +778,26 @@ class Crawler(
     if (multiPass) cands.unpersist()
     val newN = math.max(0L, frontierRows - math.max(frontierRowsHint, 0L))
 
-    writeLineage(r, perBucketCounts, poppedN, fetchedOk, errs, newN, frontierRows)
+    writeLineage(r, perBucketCounts, poppedN, fetchedOk, errs, newN, frontierRows, compiles0)
     cached.unpersist()
     RoundStats(r, poppedN, fetchedOk, errs, newN, frontierRows, offeredN)
   }
 
   /** Per-round, per-partition lineage metrics (north rule: "checkpoints
-    * frontier + seen-set state per partition with lineage metrics"). */
+    * frontier + seen-set state per partition with lineage metrics").
+    * `codegen_classes` counts the classes Spark's code generator compiled
+    * since `compiles0` was read at the round's start, in the whole driver
+    * JVM: a steady round whose plans vary by round shows a non-zero
+    * count. */
   private def writeLineage(r: Int, perBucketCounts: Seq[(Int, Long)], poppedN: Long,
-      ok: Long, errs: Long, newN: Long, frontierRows: Long): Unit = {
+      ok: Long, errs: Long, newN: Long, frontierRows: Long, compiles0: Long): Unit = {
     val perBucket = perBucketCounts
       .map { case (b, c) => s""""$b":$c""" }.mkString("{", ",", "}")
     Files.createDirectories(Paths.get(s"$workDir/lineage"))
     Files.writeString(Paths.get(s"$workDir/lineage/round-$r.json"),
       s"""{"round":$r,"popped":$poppedN,"fetched_ok":$ok,"errors":$errs,""" +
         s""""new_urls":$newN,"frontier_rows":$frontierRows,""" +
+        s""""codegen_classes":${Crawler.codegenCompiles - compiles0},""" +
         s""""popped_per_bucket":$perBucket}""")
   }
 
@@ -818,6 +852,11 @@ class Crawler(
 }
 
 object Crawler {
+  /** Classes Spark's code generator has compiled in this JVM so far (a
+    * codegen-cache hit compiles none). */
+  def codegenCompiles: Long =
+    org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+
   /** Advisory-exact ever-seen peek for the link-thinning emission filter:
     * derive the url's bucket exactly like [[Frontier.hostBucket]]
     * (xxhash64 seed 42 of the host, pmod numBuckets) and probe the

@@ -54,9 +54,11 @@ object IcebergishTable {
     *   bucket files. Delta rounds `(compactRound, round]` may each hold an
     *   appended per-bucket delta file under `delta/round=r/` — the live
     *   pool is base ∪ live deltas (see [[IcebergishTable.appendDelta]]).
-    *   Classic full commits keep `compactRound == round` (no deltas). */
+    *   Classic full commits keep `compactRound == round` (no deltas).
+    * @param bucketsN the bucket count of the table's hash layout (`None`
+    *   for manifests written before it was recorded). */
   case class Snapshot(round: Int, rows: Long, buckets: Map[Int, BucketEntry],
-      compactRound: Int) {
+      compactRound: Int, bucketsN: Option[Int] = None) {
     def bucketPaths(rootDir: String): Seq[String] =
       buckets.toSeq.sortBy(_._1).map { case (b, e) => s"$rootDir/${e.dir}/hb=$b" }
   }
@@ -65,7 +67,10 @@ object IcebergishTable {
     val bs = s.buckets.toSeq.sortBy(_._1).map { case (b, e) =>
       s""""$b":{"dir":"${e.dir}","rows":${e.rows}}"""
     }.mkString(",")
-    s"""{"round":${s.round},"rows":${s.rows},"compact":${s.compactRound},"buckets":{$bs}}"""
+    // buckets_n precedes buckets: parseManifest takes the buckets body as
+    // the rest of the document
+    val n = s.bucketsN.map(b => s""""buckets_n":$b,""").getOrElse("")
+    s"""{"round":${s.round},"rows":${s.rows},"compact":${s.compactRound},$n"buckets":{$bs}}"""
   }
 
   def parseManifest(txt: String): Snapshot = {
@@ -79,12 +84,13 @@ object IcebergishTable {
     // back-compat: manifests written before delta support have no
     // "compact" field — they never carry deltas, so compactRound = round
     val compactRound = topField("compact").map(_.toInt).getOrElse(round)
+    val bucketsN = topField("buckets_n").map(_.toInt)
     val bucketsBody = txt.split("\"buckets\":\\{")(1).stripSuffix("}").stripSuffix("}")
     val entries = "\"(\\d+)\":\\{\"dir\":\"([^\"]+)\",\"rows\":(\\d+)\\}".r
       .findAllMatchIn(bucketsBody)
       .map(m => m.group(1).toInt -> BucketEntry(m.group(2), m.group(3).toLong))
       .toMap
-    Snapshot(round, rows, entries, compactRound)
+    Snapshot(round, rows, entries, compactRound, bucketsN)
   }
 }
 
@@ -103,7 +109,11 @@ class IcebergishTable(val root: String, schema: StructType,
       * derivable columns were ~25 % of the rewrite volume. Callers that
       * drop columns must restore them on read (see
       * [[graft.frontier.Frontier.restorePool]]). */
-    dropCols: Seq[String] = Nil) extends Serializable {
+    dropCols: Seq[String] = Nil,
+    /** Bucket count of the rows' hash layout, recorded in every manifest
+      * this table writes (0 = not recorded). A reader configured with a
+      * different count would map urls to the wrong buckets. */
+    numBuckets: Int = 0) extends Serializable {
 
   import IcebergishTable.{BucketEntry, Snapshot}
 
@@ -266,7 +276,8 @@ class IcebergishTable(val root: String, schema: StructType,
     // a full (base-rewriting) commit IS a compaction: every live row is in
     // the new base files, so compactRound advances to this round and any
     // delta dirs are garbage (deleted after the rename, like pruned bases)
-    renameManifest(Snapshot(round, rows, buckets, compactRound = round))
+    renameManifest(Snapshot(round, rows, buckets, compactRound = round,
+      bucketsN = recordedBuckets(prev)))
     prune(keep = buckets.valuesIterator.map(_.dir).toSet)
     deleteRecursively(Paths.get(root, "delta"))
     rows
@@ -323,9 +334,12 @@ class IcebergishTable(val root: String, schema: StructType,
     }.foreach(deltaRows += _)
     beforeRename()
     renameManifest(Snapshot(round, prev.rows + deltaRows + rowsDelta,
-      prev.buckets, prev.compactRound))
+      prev.buckets, prev.compactRound, recordedBuckets(Some(prev))))
     prev.rows + deltaRows + rowsDelta
   }
+
+  private def recordedBuckets(prev: Option[Snapshot]): Option[Int] =
+    if (numBuckets > 0) Some(numBuckets) else prev.flatMap(_.bucketsN)
 
   private def renameManifest(s: Snapshot): Unit = {
     val tmp = Paths.get(root, "manifest.json.tmp")

@@ -43,23 +43,6 @@ class FrontierSpec extends AnyFunSuite {
     assert(rows.head.getAs[Long]("discovered_at") == 20L)
   }
 
-  test("newOnly: exact dedup vs frontier; bloom is advisory only (Add, store/url.go:155-220)") {
-    val frontier = cands(("http://a.test/1", 0, 0L), ("http://a.test/2", 0, 1L))
-    val incoming = cands(
-      ("http://a.test/2", 1, 5L), // already seen → dropped
-      ("http://b.test/9", 1, 6L)) // new → kept
-    val fresh = Frontier.newOnly(frontier, incoming).collect()
-    assert(fresh.map(_.getAs[String]("url")).toSet == Set("http://b.test/9"))
-  }
-
-  test("newOnly is idempotent (Add twice → no dupes)") {
-    val frontier = cands(("http://a.test/1", 0, 0L))
-    val once = Frontier.newOnly(frontier, cands(("http://c.test/1", 1, 1L)))
-    val merged = frontier.unionByName(once)
-    val twice = Frontier.newOnly(merged, cands(("http://c.test/1", 1, 1L)))
-    assert(twice.count() == 0)
-  }
-
   test("pop: fifo order per host = (depth, discovered_at); politeness budget respected") {
     val frontier = cands(
       ("http://a.test/d2", 2, 1L), ("http://a.test/d0", 0, 5L),
@@ -245,6 +228,112 @@ class CrawlerSpec extends AnyFunSuite {
     assert(java.nio.file.Files.list(
         java.nio.file.Paths.get(s"$dir/seen/round=1")).iterator().asScala
       .exists(_.getFileName.toString.startsWith("host_bucket=")))
+  }
+
+  /** Re-seed into a crawled work dir with a batch that mixes live-pool
+    * urls offered at a better priority (the pool row must win), archived
+    * urls (must never re-enter the pool), in-batch duplicates of one new
+    * url (the minimum (depth, discovered_at) must win) and plain new urls.
+    * The expected frontier is urlStore.Add's first-seen rule
+    * (store/url.go:155-220) computed here directly: the old frontier plus
+    * the batch minus everything ever seen. */
+  private def reseedKeepsFirstSeen(cfg: CrawlConfig): Unit = {
+    val sp = spark
+    import sp.implicits._
+    val sim = new FetchSim(numHosts = 12, pagesPerHost = 10, linksPerPage = 4)
+    val c = new Crawler(spark, tmpDir(), sim, cfg)
+    c.addSeeds(sim.seedUrls(12))
+    c.round(); c.round()
+    def state: Map[String, (Int, Long, Long)] =
+      c.frontier().select("url", "depth", "discovered_at", "last_visit").collect()
+        .map(r => r.getString(0) -> ((r.getInt(1), r.getLong(2), r.getLong(3)))).toMap
+    val before = state
+    val pooled = before.collect { case (u, (d, _, 0L)) if d > 0 => u }.toSeq.sorted
+    val archived = before.collect { case (u, (_, _, v)) if v > 0L => u }.toSeq.sorted
+    assert(pooled.size >= 3 && archived.size >= 3, s"pool $pooled archive $archived")
+    val batch =
+      pooled.take(3).map(u => (u, 0, 0L)) ++
+        archived.take(3).map(u => (u, 0, 1L)) ++
+        Seq(("http://fresh.test/dup", 3, 5L), ("http://fresh.test/dup", 1, 9L),
+          ("http://fresh.test/dup", 1, 7L), ("http://fresh.test/a", 2, 11L),
+          ("http://other.test/b", 0, 12L))
+    val rows = c.addSeedCandidates(batch.toDF("url", "depth", "discovered_at"))
+    val expected = before ++ Map(
+      "http://fresh.test/dup" -> ((1, 7L, 0L)),
+      "http://fresh.test/a" -> ((2, 11L, 0L)),
+      "http://other.test/b" -> ((0, 12L, 0L)))
+    assert(state == expected)
+    assert(rows == expected.size)
+    assert(c.lastRound == 2, "a re-seed commits at the current round")
+    // the crawl continues from the re-seeded pool, duplicate-free
+    assert(c.round().popped > 0)
+    val f = c.frontier()
+    assert(f.count() == f.select("url").distinct().count())
+  }
+
+  test("re-seed into a crawled work dir keeps first-seen semantics (classic pool)") {
+    reseedKeepsFirstSeen(CrawlConfig(numBuckets = 8, perHostBudget = 2, perBucketBudget = 100))
+  }
+
+  test("re-seed into a crawled work dir keeps first-seen semantics (delta pool, deltas live)") {
+    reseedKeepsFirstSeen(CrawlConfig(numBuckets = 8, perHostBudget = 2, perBucketBudget = 100,
+      poolDeltaRounds = 3))
+  }
+
+  test("resume under another numBuckets is refused loudly; the same count continues") {
+    import graft.sources.IcebergishTable
+    val sim = new FetchSim(numHosts = 9, pagesPerHost = 6, linksPerPage = 3)
+    val cfg = CrawlConfig(numBuckets = 8, perHostBudget = 2, perBucketBudget = 100)
+    val dir = tmpDir()
+    val c = new Crawler(spark, dir, sim, cfg)
+    c.addSeeds(sim.seedUrls(9))
+    (1 to 3).foreach(_ => c.round())
+    assert(c.frontierTable.currentSnapshot().flatMap(_.bucketsN).contains(8))
+    // 16 buckets would map urls to other buckets: the archive probe would
+    // read the wrong slices and re-admit visited pages
+    val e = intercept[IllegalArgumentException] {
+      new Crawler(spark, dir, sim, cfg.copy(numBuckets = 16))
+    }
+    assert(e.getMessage.contains("numBuckets=8"), e.getMessage)
+    val resumed = new Crawler(spark, dir, sim, cfg)
+    assert(resumed.lastRound == 3)
+    resumed.crawlUntilEmpty(maxRounds = 20)
+    val sessions = resumed.sessions()
+    assert(sessions.count() == sessions.select("url").distinct().count(),
+      "a page was crawled twice")
+    val f = resumed.frontier()
+    assert(f.count() == f.select("url").distinct().count())
+    // manifests written before the count was recorded still read
+    val old = IcebergishTable.parseManifest(
+      """{"round":2,"rows":5,"compact":2,"buckets":{"0":{"dir":"data-r2-x","rows":5}}}""")
+    assert(old.bucketsN.isEmpty && old.round == 2 && old.buckets.size == 1)
+    assert(IcebergishTable.parseManifest(IcebergishTable.renderManifest(
+      old.copy(bucketsN = Some(8)))) == old.copy(bucketsN = Some(8)))
+  }
+
+  test("steady rounds compile no codegen classes; lineage reports codegen_classes") {
+    // gated fifo crawl, every bucket popping every round (the dense merge,
+    // as in the benchmark): rounds 3 and 4 plan exactly what rounds 1-2
+    // planned, up to per-round constants, so every class is a cache hit
+    val sim = new FetchSim(numHosts = 32, pagesPerHost = 40, linksPerPage = 4,
+      screenshotPayloads = false)
+    val c = new Crawler(spark, tmpDir(), sim, CrawlConfig(numBuckets = 4,
+      perHostBudget = 2, perBucketBudget = 1000, storeFiles = false,
+      politenessRate = 2.0, politenessBurst = 2.0))
+    c.addSeeds((0 until 32).flatMap(h => (0 until 12).map(p => s"http://h$h.test/p/$p")))
+    c.round(); c.round()
+    val before = Crawler.codegenCompiles
+    val steady = Seq(c.round(), c.round())
+    val compiled = Crawler.codegenCompiles - before
+    assert(steady.forall(_.popped == 64L), s"rounds not full: $steady")
+    val json = new com.fasterxml.jackson.databind.ObjectMapper()
+    val reported = steady.map { st =>
+      json.readTree(java.nio.file.Files.readString(java.nio.file.Paths.get(
+        c.frontierTable.root, "..", "lineage", s"round-${st.round}.json")))
+        .get("codegen_classes").asLong
+    }
+    assert(compiled == 0L && reported == Seq(0L, 0L),
+      s"steady rounds compiled $compiled classes (lineage: $reported)")
   }
 
   test("real-socket fetch: a crawl runs over loopback HTTP through the pluggable seam") {

@@ -324,30 +324,6 @@ class PlanSpec extends AnyFunSuite {
     assert(bad.isEmpty, s"unmarked unpersist in operators (see q42 lesson): $bad")
   }
 
-  test("frontier bloom pre-filter probes via codegen'd might_contain, not a UDF") {
-    import spark.implicits._
-    // parquet-backed inputs: a LocalRelation would be constant-folded,
-    // evaporating the probe from the physical plan
-    val dir = java.nio.file.Files.createTempDirectory("graft-bloom-plan").toString
-    Frontier.normalizeCandidates(
-      (0 until 50).map(i => (s"http://h$i.test/", 0, i.toLong))
-        .toDF("url", "depth", "discovered_at"), 8)
-      .write.parquet(s"$dir/f")
-    Frontier.normalizeCandidates(
-      (40 until 90).map(i => (s"http://h$i.test/", 0, i.toLong))
-        .toDF("url", "depth", "discovered_at"), 8)
-      .write.parquet(s"$dir/c")
-    val f = spark.read.parquet(s"$dir/f")
-    val cands = spark.read.parquet(s"$dir/c")
-    val out = Frontier.newOnly(f, cands, expectedRows = 50L, bloomMinRows = 1L)
-    val plan = planOf(out)
-    assert(plan.contains("might_contain"), s"bloom probe missing:\n$plan")
-    assert(!plan.contains("UDF"), s"bloom probe fell back to a UDF:\n$plan")
-    // advisory only: output must still be the exact set difference
-    assert(out.select("url").collect().map(_.getString(0)).toSet ==
-      (50 until 90).map(i => s"http://h$i.test/").toSet)
-  }
-
   test("corpus dim joins plan WITHOUT broadcast when the size-gate is off") {
     // guards the unbounded-dim escape hatch: with broadcastDims=false and
     // auto-broadcast disabled, the vocab/bigram dim joins must plan as
@@ -378,6 +354,63 @@ class PlanSpec extends AnyFunSuite {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
       spark.conf.unset("spark.sql.adaptive.autoBroadcastJoinThreshold")
     }
+  }
+
+  test("seed commit: one hash exchange, and the bucket write runs one task per bucket under AQE") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd,
+      SparkListenerJobStart, SparkListenerStageCompleted}
+    // a seed list far below the advisory partition size: AQE coalesces any
+    // REPARTITION_BY_COL exchange of it to one task, so only the merge's
+    // bucket-token exchange (REPARTITION_BY_NUM) keeps the sorted bucket
+    // write parallel
+    val nb = 8
+    val stages = new java.util.concurrent.ConcurrentLinkedQueue[(Int, Long)]()
+    val markerGroup = "seed-plan-marker"
+    val markerJob = new java.util.concurrent.atomic.AtomicInteger(-1)
+    val markerDone = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+        if (markerJob.get < 0)
+          stages.add((e.stageInfo.numTasks,
+            e.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten))
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == markerGroup))
+          markerJob.set(e.jobId)
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        if (e.jobId == markerJob.get) markerDone.countDown()
+    }
+    val keys = Seq("spark.sql.adaptive.enabled",
+      "spark.sql.adaptive.advisoryPartitionSizeInBytes")
+    val prev = keys.map(k => k -> spark.conf.getOption(k))
+    spark.conf.set("spark.sql.adaptive.enabled", "true")
+    spark.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "8m")
+    val dir = java.nio.file.Files.createTempDirectory("graft-seed-plan").toString
+    val c = new graft.pipeline.Crawler(spark, dir, new graft.fetch.FetchSim(),
+      graft.pipeline.CrawlConfig(numBuckets = nb))
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      c.addSeeds((0 until 2000).map(i => s"http://h${i % 97}.test/p/$i"))
+      // events arrive in order: once a later job's end is seen, every
+      // stage of the seed call has been reported
+      spark.sparkContext.setJobGroup(markerGroup, "marker")
+      try spark.sparkContext.parallelize(Seq(1), 1).count()
+      finally spark.sparkContext.clearJobGroup()
+      assert(markerDone.await(60, java.util.concurrent.TimeUnit.SECONDS))
+    } finally {
+      spark.sparkContext.removeSparkListener(listener)
+      prev.foreach {
+        case (k, Some(v)) => spark.conf.set(k, v)
+        case (k, None) => spark.conf.unset(k)
+      }
+    }
+    import scala.jdk.CollectionConverters._
+    val seed = stages.asScala.toSeq
+    val exchanges = seed.count(_._2 > 0)
+    assert(exchanges == 1, s"seed planned $exchanges exchanges (want 1): $seed")
+    assert(seed.size == 2, s"seed ran ${seed.size} stages (want map + write): $seed")
+    assert(seed.exists { case (tasks, shuffled) => shuffled == 0 && tasks == nb },
+      s"no $nb-task bucket write stage: $seed")
+    assert(c.frontierTable.currentSnapshot().get.buckets.size == nb)
   }
 
   test("docs() reads only requested columns (wide-file column pruning)") {
